@@ -23,8 +23,13 @@ recursive-CTE transitive closure + MIN).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -244,6 +249,47 @@ def neardup_clusters(
     )
 
 
+def _half_up_rounder():
+    """Build :data:`_round_half_up`.  The function is made inside this
+    factory so that its qualified name is not importable: cloudpickle then
+    ships it BY VALUE inside :func:`pagerank`'s ``mapInPandas`` kernel, and
+    the Python worker never has to import this package (the session's
+    ``sys.path`` is not the worker's)."""
+
+    def round_half_up(x: np.ndarray, dp: int) -> np.ndarray:
+        """``F.round(x, dp)`` on a float64 array, bit for bit.
+
+        Spark rounds a double HALF_UP on its decimal string,
+        ``BigDecimal.valueOf(x).setScale(dp, HALF_UP).doubleValue()``: a
+        value that prints as a tie at digit dp+1 rounds up even when its
+        binary value sits just below the tie.  Away from a tie, rounding
+        the scaled double to the nearest integer k picks the same digits,
+        and ``k / 10**dp`` is correctly rounded, as is Spark's
+        BigDecimal-to-double conversion.  Values within 1e-3 of a tie, and
+        values too large for the scaled double to resolve 1e-3, take the
+        exact path: HALF_UP on their shortest repr, the digits
+        ``Double.toString`` prints.  ``+ 0.0`` turns a rounded -0.0 into
+        0.0, as BigDecimal has no negative zero; NaN and infinities pass
+        through, as in Spark.
+        """
+        scale = 10.0**dp
+        s = x * scale
+        out = np.rint(s) / scale + 0.0
+        frac = np.abs(s - np.trunc(s))
+        exact = ((np.abs(frac - 0.5) < 1e-3) | ~(np.abs(s) < 2.0**40)) & np.isfinite(x)
+        q = Decimal(1).scaleb(-dp)
+        ctx = Context(prec=800)
+        for i in np.flatnonzero(exact):
+            out[i] = float(Decimal(repr(float(x[i]))).quantize(q, ROUND_HALF_UP, ctx)) + 0.0
+        return out
+
+    return round_half_up
+
+
+#: ``F.round`` for float64 arrays; see :func:`_half_up_rounder`
+_round_half_up = _half_up_rounder()
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -254,8 +300,7 @@ def pagerank(
     checkpoint_every: int = 2,
     broadcast_nodes_max: int = 1_000_000,
     assume_distinct_edges: bool = False,
-    small_checkpoint_every: int = 2,
-    chain_max_edge_rows: int = 4_000_000,
+    local_max_edge_rows: int = 4_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
@@ -267,81 +312,50 @@ def pagerank(
     the input once to checkpoint it.  Correctness is entirely the
     caller's promise — there is no cheap way to verify it.
 
-    Same driver-role contract as :func:`connected_components`: every round
-    is one distributed join+aggregate (rank mass flows src→dst divided by
-    out-degree), the driver only counts rounds.  The rank state carries
-    each node's out-degree (``nd`` below), so the loop joins ranks
-    straight to the RAW edge list — no per-round rank⋈degree chain — and
-    dangling mass (nodes with no out-edges) is a filter-scan of the rank
-    state itself, not a join: one 1-row aggregate broadcast-crossed back
-    in, no collect, no driver math.
+    Update rule, per round: rank mass flows src→dst divided by the
+    source's out-degree, dangling mass (nodes with no out-edges) is
+    spread evenly, and ``new = (1-d)/n + d * (inflow + dangling/n)``.
 
-    Join strategy is picked ONCE from ``n = |nodes|`` (a scalar the driver
-    already needs for the 1/n terms):
+    The edge list is checkpointed and counted, then one of three arms
+    runs it:
 
-    - ``n <= broadcast_nodes_max`` — the rank frame is broadcast into the
-      edge join.  The big side (edges) is then never exchanged or sorted:
-      each round is one map-side hash join over the checkpointed edge
-      partitions + a map-side-combined aggregate whose exchange carries
-      at most |nodes| rows per task.  Profiled on the q69 co-purchase
-      graph at sf0.1 (1.8M edges) and its 10x replication (17.9M edges):
-      2.0-2.2x faster end-to-end than the sort-merge form at BOTH scales
-      (7.4s→3.4s, 29.8s→17.0s), with per-round cost dropping ~2.5s→
-      ~0.8s at 10x — the remaining 10x wall is the one-time linear setup
-      (edge distinct + degree build), i.e. work proportional to data, not
-      per-round overhead.  On a dangling-free graph whose edge list is
-      small enough (``chain_max_edge_rows``, read for free from the setup
-      aggregate's degree sum), the per-round rank frame is referenced
-      exactly ONCE by the next round's plan (inside the contribs
-      broadcast), so rounds chain LAZILY and the path checkpoints every
-      ``small_checkpoint_every`` rounds (r11): K rounds cost
-      ~K/small_checkpoint_every driver actions and measurably fewer
-      scheduler jobs (53 → 48 jobs for q69's 10 rounds at 2), with
-      bit-identical output (same plan tree, materialized less often; the
-      per-round dp snap already pins summation order).  The chain gate
-      exists because the win is a LATENCY effect: on the 1.8M-edge q69
-      graph cadence 2 measured 6.25 s vs 6.96 s every-round (4-trial
-      interleaved medians; cadence 5 = 6.86 s and a full 10-round unroll
-      regressed to 9.9 s — AQE re-planning grows with plan depth), but
-      on its 17.9M-edge 10x replication chaining REGRESSED 7.4/10.0 s →
-      9.8/12/31 s (erratic — the two e-joins per action compete for
-      execution memory within one job), so large edge lists keep the
-      every-round cut;
-      a graph WITH dangling mass keeps the every-round checkpoint — its
-      dangling aggregate is a second reference to the rank frame, and an
-      unmaterialized chain would re-execute each round's subtree per
-      reference (2^rounds growth).
-    - larger graphs — sort-merge join with ``checkpoint_every`` lineage
+    - **local** — ``|edges| <= local_max_edge_rows``: the edge list is
+      coalesced to one partition and ONE ``mapInPandas`` task runs all
+      ``n_iter`` rounds in numpy.  Small graphs are bound by the
+      distributed arms' per-round job floor (about five jobs and ~0.3 s
+      of scheduling and driver gap per round), not by data: q69 over a
+      162k-edge graph ran 50 jobs in 6.0 s, and runs 12 jobs in 2.0 s
+      here.  The gate is a measured local default, just under the
+      crossover on 4 cores (q69's sf0.1 graph replicated, 10 rounds,
+      local vs broadcast: 1.8M edges 2.2 vs 3.7 s, 4M 5.0 vs 5.7 s, 8M
+      10.0 vs 7.1 s); the distributed arms are the fallback that is
+      safe at scale, as the local arm holds every edge in one Python
+      worker.  A negative gate disables it.
+    - **broadcast** — ``|nodes| <= broadcast_nodes_max``: the rank frame
+      is broadcast into the edge join, so the edges are never exchanged
+      or sorted: each round is one map-side hash join over the
+      checkpointed edge partitions plus a map-side-combined aggregate
+      whose exchange carries at most |nodes| rows per task.  Profiled on
+      the q69 co-purchase graph at sf0.1 (1.8M edges) and its 10x
+      replication (17.9M edges): 2.0-2.2x faster end-to-end than the
+      sort-merge form at BOTH scales (7.4s→3.4s, 29.8s→17.0s).  Every
+      round is checkpointed.
+    - **sort-merge** — larger graphs, with ``checkpoint_every`` lineage
       cuts; 2 is the measured sweet spot (each checkpoint materializes a
       |nodes|-row frame and schedules a job — every round pays that fixed
       cost twice as often for no lineage benefit, while 5+ lets the
       chained-round plan grow enough that analysis/AQE overhead
       dominates).  The final round always checkpoints.
 
-    Both paths run the IDENTICAL scalar arithmetic in the identical
-    order (rank/deg contributions, damped sum, optional per-round
-    rounding), so results are bit-equal regardless of which is taken —
+    The distributed arms carry each node's out-degree in the rank state
+    (``nd`` below), so a round joins ranks straight to the raw edge list,
+    and the dangling mass is a filter-scan of the rank state, not a join.
+    All three arms run the IDENTICAL scalar arithmetic in the identical
+    order (the local arm's :data:`_round_half_up` reproduces
+    ``F.round``), so results are bit-equal whichever arm is taken —
     pinned by tests/test_operators.py running the dense-power-iteration
-    fixture against both.
-
-    Local wall floor (measured 2026-08-14, q69 graph, 1.8M edges, 32
-    cores): fully UNROLLING all 10 rounds into one lazy plan (no
-    checkpoints, single action) is bit-identical and saved <20%
-    (3.5-4.4s vs ~4.5s loop); a join-free prototype that inlined the
-    rank state as a foldable ``from_json`` array literal (the bloom
-    idiom — no broadcast exchange, no checkpoint, one aggregate job +
-    a ≤|nodes|-row collect per round) still cost 0.28-0.33s/round vs
-    the broadcast form's ~0.35s.  So the per-round floor is the JOB
-    itself — task scheduling plus the full edge-partition scan feeding
-    the aggregate — with the BroadcastExchange contributing only
-    ~0.06s; power iteration's data dependence makes those rounds
-    inherently sequential.  The literal-map form was rejected on that
-    measurement: ~0.7s total saving, a 2.3s one-time node-index pass,
-    driver-resident rank state (unbounded in |nodes|, unlike k-means'
-    k·dim model), and a measured 1-ulp 6dp divergence on one node.  On
-    a real cluster the per-round term is the edge scan+join, which the
-    shipped forms already minimize, so the loop (simpler, resumable,
-    bounded plans) stays.
+    fixture through each arm.  An empty edge list gives an empty
+    (node, rank) frame on every arm.
 
     Fixed ``n_iter`` (not convergence-tested): PageRank mass moves <1%
     after ~10 damped rounds on social-shaped graphs, and a deterministic
@@ -360,10 +374,9 @@ def pagerank(
     output rounding.  The perturbation itself (<5e-10/round) sits far
     below PageRank's meaningful resolution.  ``None`` keeps raw doubles.
     """
-    if checkpoint_every < 1 or small_checkpoint_every < 1:
+    if checkpoint_every < 1:
         raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}/"
-            f"{small_checkpoint_every} "
+            f"checkpoint_every must be >= 1, got {checkpoint_every} "
             "(pass n_iter to checkpoint only the final round)"
         )
     spark = edges.sparkSession
@@ -376,7 +389,7 @@ def pagerank(
         e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         if not assume_distinct_edges:
             e = e.distinct()
-        # edge construction may be expensive; it feeds 2 setup frames + the loop
+        # edge construction may be expensive; it feeds the count + every arm
         e = e.localCheckpoint()
         created |= _pinned_rdd_ids(e)
         # node state: (node, deg) — deg NULL marks a dangling node.  Carrying
@@ -395,82 +408,131 @@ def pagerank(
                 "node",
                 F.when(F.col("__deg_raw") > 0, F.col("__deg_raw")).alias("deg"),
             )
-            .localCheckpoint()
         )
-        created |= _pinned_rdd_ids(nd)
-        # BOTH one-time setup scalars (node count for the 1/n terms; the
-        # dangling flag that skips the per-round dangling-mass job on
-        # symmetric graphs — adding the exact-zero dm/n term was a no-op
-        # in IEEE arithmetic anyway) ride ONE aggregate over the
-        # checkpointed node state instead of a count job + a filter-scan
-        # job (r10: one fewer setup action per call, same values)
-        setup = nd.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("hd"),
-            # total out-degree == |E| — free here, feeds the chain gate
-            F.coalesce(F.sum("deg"), F.lit(0)).alias("te"),
-        ).first()
-        n = int(setup["n"])
-        has_dangling = bool(setup["hd"])
-        total_edges = int(setup["te"])
-        small = n <= broadcast_nodes_max
-        ranks = nd.select("node", "deg", F.lit(1.0 / n).alias("rank"))
-        if small:
-            ranks = ranks.localCheckpoint()
-            created |= _pinned_rdd_ids(ranks)
-
-        # lineage-cut cadence (docstring): broadcast path chains rounds
-        # lazily iff the dangling aggregate adds no second reference to
-        # the per-round rank frame AND the edge list is small enough that
-        # per-round latency (not compute) is the wall
-        cut_every = (
-            (
-                small_checkpoint_every
-                if not has_dangling and total_edges <= chain_max_edge_rows
-                else 1
+        if e.count() <= local_max_edge_rows:
+            out = _pagerank_local(e, nd, n_iter, damping, per_iter_round_dp)
+        else:
+            out = _pagerank_distributed(
+                e, nd, created, n_iter, damping, per_iter_round_dp,
+                checkpoint_every, broadcast_nodes_max,
             )
-            if small
-            else checkpoint_every
-        )
-        for i in range(n_iter):
-            r = F.broadcast(ranks) if small else ranks
-            contribs = (
-                r.join(e, r.node == e.src)
-                .select(F.col("dst").alias("node"), (r.rank / r.deg).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
-            # contribs is at most |nodes| rows post-aggregate — on the small
-            # path broadcast it too, so the rank update never exchanges nd
-            nxt = nd.join(F.broadcast(contribs) if small else contribs, "node", "left")
-            if has_dangling:
-                dangling = (
-                    ranks.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                new_rank = F.lit((1.0 - damping) / n) + damping * (
-                    inflow + F.col("dm") / n
-                )
-            else:
-                new_rank = F.lit((1.0 - damping) / n) + damping * inflow
-            if per_iter_round_dp is not None:
-                new_rank = F.round(new_rank, per_iter_round_dp)
-            ranks = nxt.select("node", "deg", new_rank.alias("rank"))
-            if (i + 1) % cut_every == 0 or i == n_iter - 1:
-                ranks = ranks.localCheckpoint()
-                created |= _pinned_rdd_ids(ranks)
-        # materialize the returned frame into its OWN checkpoint, then release
-        # every intermediate one THIS call pinned (edge frame, node state, the
-        # per-round rank snapshots — its own ids, never a concurrent
-        # caller's) — see _unpersist_rdds
-        out = ranks.select("node", F.round("rank", 6).alias("rank")).localCheckpoint()
+        # release every intermediate checkpoint THIS call pinned (edge
+        # frame, node state, the per-round rank snapshots — its own ids,
+        # never a concurrent caller's) but the returned frame's own — see
+        # _unpersist_rdds
         _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
         return out
     except BaseException:
         _unpersist_rdds(spark, created)
         raise
+
+
+def _pagerank_local(
+    e: DataFrame, nd: DataFrame, n_iter: int, damping: float, dp: int | None
+) -> DataFrame:
+    """:func:`pagerank`'s local arm: one task runs every round in numpy.
+
+    Mirrors the distributed rounds operation for operation: ``rank / deg``
+    per edge, inflow and dangling mass added one by one from 0.0 as
+    Spark's ``sum`` adds them (in edge order here, partition order
+    there: the per-round snap absorbs that ulp noise), the same damped
+    update, ``F.round``'s HALF_UP snap.  Returns the checkpointed
+    (node, rank) frame with the distributed arms' schema."""
+    schema = StructType([nd.schema["node"], StructField("rank", DoubleType())])
+
+    def kernel(batches):
+        parts = list(batches)
+        m = sum(len(p) for p in parts)
+        if m == 0:
+            return
+        pdf = pd.concat(parts)
+        nodes, idx = np.unique(
+            np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
+            return_inverse=True,
+        )
+        si, di = idx[:m], idx[m:]
+        n = len(nodes)
+        deg = np.bincount(si, minlength=n)
+        dangling = deg == 0
+        has_dangling = bool(dangling.any())
+        base = (1.0 - damping) / n
+        rank = np.full(n, 1.0 / n)
+        for _ in range(n_iter):
+            inflow = np.bincount(di, weights=rank[si] / deg[si], minlength=n)
+            if has_dangling:
+                dm = float(np.cumsum(rank[dangling])[-1])
+                rank = base + damping * (inflow + dm / n)
+            else:
+                rank = base + damping * inflow
+            if dp is not None:
+                rank = _round_half_up(rank, dp)
+        yield pd.DataFrame({"node": nodes, "rank": _round_half_up(rank, 6)})
+
+    return e.coalesce(1).mapInPandas(kernel, schema).localCheckpoint()
+
+
+def _pagerank_distributed(
+    e: DataFrame,
+    nd: DataFrame,
+    created: set[int],
+    n_iter: int,
+    damping: float,
+    dp: int | None,
+    checkpoint_every: int,
+    broadcast_nodes_max: int,
+) -> DataFrame:
+    """:func:`pagerank`'s broadcast and sort-merge arms; adds every
+    checkpoint it pins to ``created``."""
+    nd = nd.localCheckpoint()
+    created |= _pinned_rdd_ids(nd)
+    # BOTH one-time setup scalars (node count for the 1/n terms; the
+    # dangling flag that skips the per-round dangling-mass job on
+    # symmetric graphs — adding the exact-zero dm/n term was a no-op
+    # in IEEE arithmetic anyway) ride ONE aggregate over the
+    # checkpointed node state
+    setup = nd.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("hd"),
+    ).first()
+    # an empty edge list has no nodes: every frame below is empty, so the
+    # 1/n terms only need to be finite
+    n = max(int(setup["n"]), 1)
+    has_dangling = bool(setup["hd"])
+    small = n <= broadcast_nodes_max
+    ranks = nd.select("node", "deg", F.lit(1.0 / n).alias("rank"))
+    if small:
+        ranks = ranks.localCheckpoint()
+        created |= _pinned_rdd_ids(ranks)
+    for i in range(n_iter):
+        r = F.broadcast(ranks) if small else ranks
+        contribs = (
+            r.join(e, r.node == e.src)
+            .select(F.col("dst").alias("node"), (r.rank / r.deg).alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
+        # contribs is at most |nodes| rows post-aggregate — on the small
+        # path broadcast it too, so the rank update never exchanges nd
+        nxt = nd.join(F.broadcast(contribs) if small else contribs, "node", "left")
+        if has_dangling:
+            dangling = (
+                ranks.where(F.col("deg").isNull())
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+            )
+            nxt = nxt.crossJoin(F.broadcast(dangling))
+            new_rank = F.lit((1.0 - damping) / n) + damping * (
+                inflow + F.col("dm") / n
+            )
+        else:
+            new_rank = F.lit((1.0 - damping) / n) + damping * inflow
+        if dp is not None:
+            new_rank = F.round(new_rank, dp)
+        ranks = nxt.select("node", "deg", new_rank.alias("rank"))
+        if small or (i + 1) % checkpoint_every == 0 or i == n_iter - 1:
+            ranks = ranks.localCheckpoint()
+            created |= _pinned_rdd_ids(ranks)
+    return ranks.select("node", F.round("rank", 6).alias("rank")).localCheckpoint()
 
 
 def incremental_components(

@@ -14,9 +14,12 @@ Spark-first design:
   Instead we keep it shuffle-free: after the broadcast join the rows for one
   event are already colocated in one partition (they were produced from one
   input row), so a window over the event key is AQE-local.  In practice
-  Catalyst still plans a shuffle for the window; the truly shuffle-free form
-  is the aggregate-of-struct below (``nearest_neighbor_agg``) which
-  map-side-combines to one row per event before any exchange.
+  Catalyst still plans a shuffle for the window.  The aggregate-of-struct
+  below (``nearest_neighbor_agg``) shuffles one row per event instead: a
+  partial aggregate combines each event's candidate rows before the
+  exchange.  That aggregate is sort-based (Sort + SortAggregate on every
+  fact key, on both sides of the exchange), not a HashAggregate, because
+  ``min_by``'s struct buffer is not fixed-width.
 """
 
 from __future__ import annotations
@@ -44,10 +47,15 @@ def nearest_neighbor_agg(
 ) -> DataFrame:
     """Assign each fact row its nearest dim row (haversine, min distance).
 
-    Plan shape: BroadcastNestedLoopJoin → partial HashAggregate (map-side
-    ``min_by`` combine) → final aggregate.  The fact table is scanned once
-    and never shuffled in full width — only (keys × 1 struct) reach the
-    exchange.  Ties break on ascending dim id (deterministic).
+    Plan shape: BroadcastNestedLoopJoin → Sort + partial SortAggregate on
+    all ``fact_keys`` → Exchange hashpartitioning(``fact_keys``) → Sort +
+    final SortAggregate.  Spark cannot hash-aggregate here: ``min_by``
+    keeps a struct in its buffer, which is not fixed-width, so both sides
+    of the exchange sort on every fact key.  The partial aggregate still
+    combines each fact row's candidates before the exchange: the fact
+    table is scanned once and never shuffled in full width — only
+    (keys × 1 struct) reach the exchange.  Ties break on ascending dim id
+    (deterministic).
 
     ``fact_keys`` must uniquely identify a fact row and carry every fact
     column the caller needs downstream.

@@ -78,9 +78,10 @@ def register(name: str, sql: str | None, doc: str = ""):
 # 2 of 2 (see OPTIMIZATION_r11.md); its changed kernels:
 #   - q69/q185: the co-purchase prologue re-spreads the 1-partition
 #     checkpointed distinct before the pair fanout (2.51 s -> 0.87 s),
-#     and pagerank/PPR chain rounds lazily between lineage cuts
-#     (small_checkpoint_every=2 on dangling-free broadcast paths;
-#     bit-equal, 51->46 / 53->48 scheduler jobs);
+#     and pagerank/PPR chained rounds lazily between lineage cuts on
+#     dangling-free broadcast paths (bit-equal, 51->46 / 53->48
+#     scheduler jobs; pagerank's small graphs have since moved to one
+#     local task);
 #   - q188/q189/q196: LPA's per-round label-update join (a row-wise
 #     no-op on the internally symmetric edge list) is removed and
 #     rounds chain at cadence 2 (bit-equal, trajectory-test-pinned);
@@ -9365,16 +9366,19 @@ stt AS (
   SELECT source, sum_q, tot_s, vocab_s,
          CAST(SUM(tot_s) OVER () AS BIGINT) AS tot
   FROM st
+),
+stk AS (
+  SELECT source, tot_s, vocab_s,
+         sum_q + CAST(tot_s AS HUGEINT)
+                 * (CAST(round(ln(CAST(tot AS DOUBLE)) * 1000000) AS BIGINT)
+                    - CAST(round(ln(CAST(tot_s AS DOUBLE)) * 1000000)
+                           AS BIGINT)) AS kl_q
+  FROM stt
 )
 SELECT source, tot_s AS n_tokens, vocab_s AS vocab_size,
-       round(CAST(sum_q
-                  + CAST(tot_s AS HUGEINT)
-                    * (CAST(round(ln(CAST(tot AS DOUBLE)) * 1000000)
-                            AS BIGINT)
-                       - CAST(round(ln(CAST(tot_s AS DOUBLE)) * 1000000)
-                              AS BIGINT)) AS DOUBLE)
-             / (CAST(tot_s AS DOUBLE) * 1000000.0), 6) AS kl_to_corpus
-FROM stt
+       CAST(sign(kl_q) * ((2 * abs(kl_q) + tot_s) // (2 * tot_s)) AS DOUBLE)
+       / CAST(1000000 AS DOUBLE) AS kl_to_corpus
+FROM stk
 ORDER BY source
 """
 
@@ -9436,16 +9440,19 @@ def q204_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     kl_q = F.col("sum_q") + (
         F.col("tot_s") * (qln(F.col("tot")) - qln(F.col("tot_s")))
     ).cast("decimal(38,0)")
+    # KL on the 1e-6 grid = kl_q / tot_s rounded HALF_UP (away from zero),
+    # in exact integer arithmetic on both engines: a double division then
+    # a 6dp round diverged on decimal ties (Spark rounds the printed
+    # digits, DuckDB the binary value: 0.26099 vs 0.260989)
+    q_abs = F.expr("(2 * abs(kl_q) + tot_s) div (2 * tot_s)")
+    q = F.when(F.col("kl_q") < 0, -q_abs).otherwise(q_abs)
     return (
-        stt.select(
+        stt.withColumn("kl_q", kl_q)
+        .select(
             "source",
             F.col("tot_s").alias("n_tokens"),
             F.col("vocab_s").alias("vocab_size"),
-            F.round(
-                kl_q.cast("double")
-                / (F.col("tot_s").cast("double") * 1_000_000.0),
-                6,
-            ).alias("kl_to_corpus"),
+            (q.cast("double") / 1_000_000.0).alias("kl_to_corpus"),
         )
         .orderBy("source")
     )

@@ -479,41 +479,117 @@ def test_approx_count_distinct_error_bound(spark, sf_dir):
         assert abs(r["approx"] - r["exact"]) <= max(3, 0.15 * r["exact"]), r
 
 
-def test_pagerank_matches_dense_power_iteration(spark):
+#: keyword arguments that force each of pagerank's three arms; a negative
+#: gate disables its arm even for an empty edge list (0 edges <= a 0 gate)
+PAGERANK_ARMS = {
+    "local": {},
+    "broadcast": {"local_max_edge_rows": -1},
+    "sort_merge": {"local_max_edge_rows": -1, "broadcast_nodes_max": -1},
+}
+
+
+def _dense_pagerank(edges, n, n_iter=10, d=0.85):
+    """Independent dense power iteration with pagerank's update rule."""
     import numpy as np
 
-    from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank
-
-    # 5-node graph with a hub (0), a cycle (1->2->3->1) and a dangler (4)
-    edges = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 1), (1, 4)]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
-
-    # independent dense computation, identical update rule
-    n, d = 5, 0.85
     out: dict[int, int] = {}
     for s, _ in edges:
         out[s] = out.get(s, 0) + 1
     r = np.full(n, 1.0 / n)
-    for _ in range(10):
+    for _ in range(n_iter):
         nxt = np.full(n, (1 - d) / n)
         dangling = sum(r[v] for v in range(n) if v not in out)
         nxt += d * dangling / n
         for s, t in edges:
             nxt[t] += d * r[s] / out[s]
         r = nxt
-    for v in range(n):
-        assert abs(got[v] - r[v]) < 1e-6, (v, got[v], r[v])
-    assert abs(sum(got.values()) - 1.0) < 1e-4
+    return r
 
-    # both join strategies must produce BIT-equal ranks: the broadcast
-    # fast path (default here — 5 nodes) and the sort-merge path
-    # (forced via broadcast_nodes_max=0) run the same scalar arithmetic
-    big = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=10, broadcast_nodes_max=0).collect()
-    }
-    assert big == got
+
+def test_pagerank_matches_dense_power_iteration(spark):
+    from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank
+
+    # 5-node graph with a hub (0), a cycle (1->2->3->1) and a dangler (4);
+    # then a dangling-free graph (every node has an out-edge)
+    dangler = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 1), (1, 4)]
+    free = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 1), (3, 0), (4, 0), (2, 4)]
+    for edges in (dangler, free):
+        df = spark.createDataFrame(edges, "src int, dst int")
+        want = _dense_pagerank(edges, 5)
+        for dp in (None, 9):
+            # every arm must produce BIT-equal ranks under the same schema:
+            # all three run the same scalar arithmetic in the same order
+            outs = {
+                arm: pagerank(df, n_iter=10, per_iter_round_dp=dp, **kw)
+                for arm, kw in PAGERANK_ARMS.items()
+            }
+            ranks = {arm: dict(map(tuple, o.collect())) for arm, o in outs.items()}
+            assert ranks["broadcast"] == ranks["local"], (edges, dp)
+            assert ranks["sort_merge"] == ranks["local"], (edges, dp)
+            assert {o.schema for o in outs.values()} == {outs["local"].schema}
+            got = ranks["local"]
+            for v in range(5):
+                assert abs(got[v] - want[v]) < 1e-6, (v, got[v], want[v])
+            assert abs(sum(got.values()) - 1.0) < 1e-4
+
+
+@pytest.mark.parametrize("arm", sorted(PAGERANK_ARMS))
+def test_pagerank_empty_edge_list(spark, arm):
+    """An empty edge list has no nodes: every arm returns an empty frame
+    with the schema it gives a non-empty edge list (it used to raise
+    ZeroDivisionError from the 1/n terms)."""
+    from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank
+
+    kw = PAGERANK_ARMS[arm]
+    empty = spark.createDataFrame([], "src int, dst int")
+    one = spark.createDataFrame([(1, 2)], "src int, dst int")
+    out = pagerank(empty, per_iter_round_dp=9, **kw)
+    assert out.collect() == []
+    assert out.schema == pagerank(one, per_iter_round_dp=9, **kw).schema
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The local PageRank arm's numpy snap is ``F.round`` bit for bit: on
+    random positive doubles, and on decimal half-way ties, which Spark
+    rounds HALF_UP on the printed digits even where the binary value sits
+    just below the tie."""
+    import numpy as np
+
+    from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        _round_half_up,
+    )
+
+    rng = np.random.default_rng(11)
+    scales = 10.0 ** rng.integers(-12, 7, 3000)
+    randoms = (rng.random(3000) * scales).tolist()
+    for dp in (6, 9):
+        ks = rng.integers(0, 10**7, 1000)
+        ties = [float(f"{k}5e-{dp + 1}") for k in ks]
+        xs = randoms + ties + [0.0, 1.0, 0.5 * 10.0**-dp, 2.5 * 10.0**-dp]
+        df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+        got = [r[0] for r in df.orderBy("i").select(F.round("x", dp)).collect()]
+        assert _round_half_up(np.array(xs), dp).tolist() == got, dp
+
+    # it runs inside the Python worker, which may not be able to import
+    # this package: it must unpickle and run without it
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    code = (
+        "import pickle, sys, numpy as np; "
+        "print(pickle.loads(sys.stdin.buffer.read())(np.array([0.5]), 0).tolist())"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(_round_half_up),
+        capture_output=True,
+        cwd="/",
+        env={"PATH": os.environ.get("PATH", "")},
+    )
+    assert run.stdout.strip() == b"[1.0]", run.stderr
 
 
 def test_approx_count_distinct_within_documented_rsd(spark, sf_dir):
